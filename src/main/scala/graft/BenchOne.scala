@@ -1,55 +1,56 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Steady-state single-query timing: runs each named query `reps` times in
-  * one warmed JVM and prints per-rep wall seconds — the signal the shared
-  * box's load variance hides in full Bench totals (BASELINE.md).
+/** Steady-state per-key timing: each key `reps` times in one warmed JVM
+  * through the noop sink, printing per-rep wall seconds and the min — the
+  * signal the shared box's load variance hides in full Bench totals
+  * (BASELINE.md). Min-of-N absorbs first-run codegen and transient load
+  * spikes. With `outJson`, also writes the per-key min-of-N anchor in the
+  * BASELINE_PERKEY.json format (merge two runs with
+  * tools/combine_perkey.py); `load_avg_*` bound the run's context.
   *
-  * usage: runMain graft.BenchOne <query[,query...]> [reps]
-  * env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32)
+  * A key that fails any rep is left out of the anchor, named in `errors`,
+  * and the exit code is 1: a failure must not read as a ~0 s anchor.
+  *
+  * usage: runMain graft.BenchOne <key[,key...]|all> [reps] [outJson]
+  * env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (see Harness)
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    import Harness.f3
+    val queries = SparkEntry.queries
+    val names =
+      if (args(0) == "all") queries.keys.toSeq.sorted else args(0).split(",").toSeq
     val reps = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition-headroom A/B knob (r13 ×100 probe): raising
-      // initialPartitionNum was the obvious remedy for the heavy graph
-      // keys' second-decade overhang, and the interleaved A/B REFUTED it —
-      // ×8 headroom cost graph_clustering_coeff ~40% at sf1 (extra
-      // task-scheduling overhead across its 256-partition stages) and was
-      // a wash at sf10 (414 vs 417 s interleaved), so the default stays 1
-      // and the knob stays only for future probes.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt *
-          sys.env.getOrElse("SPARK_GRAFT_AQE_HEADROOM", "1").toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_ACTION=noop times a full materialization (guide §1.4 —
-    // count() lets Catalyst prune expression-shaped work; see the r16
-    // batch-5 amendment). Default stays count for anchor continuity.
-    val useNoop = sys.env.get("SPARK_GRAFT_ACTION").contains("noop")
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        if (useNoop) df.write.format("noop").mode("overwrite").save()
-        else df.count()
-        (System.nanoTime() - t0) / 1e9
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
+    val loadStart = Harness.load
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    val mins = names.flatMap { name =>
+      val fn = queries(name)
+      val rs = (1 to reps).map(_ => Harness.run(spark, name)(Harness.noop(fn(spark, sfDir))))
+      if (rs.exists(_.error.nonEmpty)) { failed += name; None }
+      else {
+        val times = rs.map(_.wallS)
+        println(s"BENCHONE $name reps=${times.map(f3).mkString(",")} min=${f3(times.min)}")
+        Some(name -> times.min)
       }
-      def f2(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      val tag = if (useNoop) "BENCHONE(noop)" else "BENCHONE"
-      println(s"$tag $name reps=${times.map(f2).mkString(",")} min=${f2(times.min)}")
+    }
+    if (args.length > 2) {
+      val keysJson = mins
+        .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      val errJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val json =
+        s"""{"sf":"$sfDir","cpus":${Harness.cpus},"reps":$reps,"date":"${java.time.LocalDate.now}",
+           |"load_avg_start":${f3(loadStart)},"load_avg_end":${f3(Harness.load)},
+           |"total_min_sec":${f3(mins.map(_._2).sum)},"n_keys":${mins.size},
+           |"n_errors":${failed.size},"errors":$errJson,
+           |"keys":$keysJson}""".stripMargin.replace("\n", "")
+      java.nio.file.Files.write(java.nio.file.Paths.get(args(2)),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"WROTE ${args(2)} (${mins.size} keys, ${failed.size} errors)")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -16,10 +16,13 @@ object Graft {
 
   /** Recommended local session: UTC, AQE on (default), shuffle partitions
     * sized to cores — on a real cluster, size to 2-3x total executor cores
-    * and let AQE coalesce. */
+    * and let AQE coalesce. `conf` entries apply last, so they override
+    * these defaults (`spark.master` for a local-cluster, executor
+    * settings). */
   def session(appName: String = "graft",
-              cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = SparkSession.builder()
+              cores: Int = Runtime.getRuntime.availableProcessors(),
+              conf: Map[String, String] = Map.empty): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -27,7 +30,8 @@ object Graft {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     functions.GraftFunctions.register(s)
     s
   }

@@ -1,85 +1,58 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Whole-board executed-plan sweep (r16): run every registered key once,
-  * dump its AQE-final plan, and print one machine-greppable summary line
-  * per key with the operator counts that matter for the optimization
-  * audit — Exchange, SortMergeJoin, CartesianProduct,
-  * BroadcastNestedLoopJoin, ObjectHashAggregate (non-codegen agg state),
-  * Generate, Sort. The per-key lines make stragglers mechanically
-  * findable instead of depending on which keys someone thought to read.
+/** Executed-plan sweep: run each registered key once, dump its AQE-final
+  * plan to `<outDir>/<key>.txt`, and print one machine-greppable SWEEP line
+  * per key with the operator counts that matter for the optimization audit
+  * (see `counts`) — stragglers become mechanically findable instead of
+  * depending on which keys someone thought to read. `jobs=` counts the
+  * Spark jobs the key's collect fires (the 32-core anti-scalers are
+  * many-small-jobs shapes: each job is a scheduler round trip that data
+  * size never amortizes at fixture scale).
   *
-  * r17: `ex=` counts REAL shuffle exchanges only (ADVICE r16 — the bare
-  * "Exchange" substring also matched ReusedExchange and BroadcastExchange,
-  * inflating the one signal the tool exists to surface); `reex=`/`bex=`
-  * report those separately. `jobs=` counts Spark jobs fired by the key's
-  * collect (VERDICT r16 #4 — the 32-core anti-scalers are many-small-jobs
-  * shapes: each job is a scheduler round-trip that data size never
-  * amortizes at fixture scale, and lineage re-execution multiplies it).
-  *
-  * usage: runMain graft.PlanSweep [outDir]
-  * env:   SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32)
+  * usage: runMain graft.PlanSweep [outDir] [key,key,...]
+  * env:   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (see Harness)
   */
 object PlanSweep {
+  /** Operator counts of an executed-plan string, in SWEEP line order.
+    * `ex=` counts real shuffle exchanges only; `reex=`/`bex=` count reused
+    * and broadcast exchanges. All three count the node that leads a plan
+    * line: a ReusedExchange line also quotes the text of the exchange it
+    * reuses, which must not count a second time. */
+  def counts(plan: String): Seq[(String, Int)] = {
+    def node(op: String) = s"(?m)^[ :+-]*$op\\b".r.findAllIn(plan).length
+    def c(pat: String) = pat.r.findAllIn(plan).length
+    Seq("ex" -> node("Exchange"), "reex" -> node("ReusedExchange"),
+      "bex" -> node("BroadcastExchange"), "smj" -> c("SortMergeJoin"),
+      "cart" -> c("CartesianProduct"), "bnlj" -> c("BroadcastNestedLoopJoin"),
+      "oha" -> c("ObjectHashAggregate"), "gen" -> c("Generate"),
+      "sort" -> c("\\bSort\\b"), "win" -> c("Window"),
+      "bhj" -> c("BroadcastHashJoin"))
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = if (args.length > 0) args(0) else "/tmp/plans_all"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    val metrics = new KeyMetrics
+    spark.sparkContext.addSparkListener(metrics)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // per-key job counter: jobs started between key start and key end.
-    // Job starts are driver-side and the sweep runs keys sequentially, so
-    // a plain listener counter is exact.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
-    val errors = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val errors = Harness.board(args.lift(1)).flatMap { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val j0 = jobCount.get()
-        val t0 = System.nanoTime()
-        df.collect() // finalize the adaptive plan
-        val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are posted async (and the bus drain API is
-        // private[spark]); poll until the counter is stable for 50 ms
-        var jobs = jobCount.get() - j0
-        var stable = false
-        while (!stable) {
-          Thread.sleep(50)
-          val again = jobCount.get() - j0
-          if (again == jobs) stable = true else jobs = again
-        }
+        // collect, not count: finalizes this Dataset's adaptive plan
+        val r = Harness.run(spark, name)(df.collect())
+        r.error.foreach(throw _)
+        val jobs = metrics.drained(name).jobs.get
         val plan = df.queryExecution.executedPlan.toString
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/$name.txt"),
-          s"== $name @ $sfDir wall=${"%.2f".format(wall)}s jobs=$jobs\n\n" + plan)
-        def c(pat: String) = pat.r.findAllIn(plan).length
-        // real shuffles = all "Exchange" tokens minus reused minus broadcast
-        val exAll = c("Exchange")
-        val reex = c("ReusedExchange")
-        val bex = c("BroadcastExchange")
-        println(f"SWEEP $name%-36s wall=${wall}%6.2f jobs=$jobs " +
-          s"ex=${exAll - reex - bex} reex=$reex bex=$bex " +
-          s"smj=${c("SortMergeJoin")} " +
-          s"cart=${c("CartesianProduct")} bnlj=${c("BroadcastNestedLoopJoin")} " +
-          s"oha=${c("ObjectHashAggregate")} gen=${c("Generate")} " +
-          s"sort=${c("\\bSort\\b")} win=${c("Window")} bhj=${c("BroadcastHashJoin")}")
+          s"== $name @ $sfDir wall=${"%.2f".format(r.wallS)}s jobs=$jobs\n\n" + plan)
+        println(f"SWEEP $name%-36s wall=${r.wallS}%6.2f jobs=$jobs " +
+          counts(plan).map { case (k, v) => s"$k=$v" }.mkString(" "))
+        None
       } catch { case e: Throwable =>
-        errors += name
         println(s"SWEEP $name FAILED ${e.getClass.getSimpleName}")
+        Some(name)
       }
     }
     println(s"SWEEP DONE errors=${errors.size} ${errors.take(10).mkString(",")}")

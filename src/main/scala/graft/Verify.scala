@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,40 +8,11 @@ object Verify {
     // The driver passes exactly two; the filter is for local targeted runs.
     val sfDir = args(0)
     val outDir = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the multi-JVM attest run this same dump main
-    // under local-cluster[n,cores,memMB] (separate executor processes —
-    // exercises executor-side deserialization of the custom expressions,
-    // the native operators' exchanges, broadcast + network shuffle). The
-    // driver contract is unchanged: unset → local[cpus] exactly as before.
-    // Under local-cluster the executor JVMs are launched from the Spark
-    // dist at SPARK_HOME and know nothing of sbt's classpath, so the graft
-    // classes dir must ride spark.executor.extraClassPath (same host ⇒ a
-    // plain path works); executor memory is sized by SPARK_GRAFT_EXEC_MEM.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    sys.env.get("SPARK_GRAFT_EXEC_CP")
-      .foreach(cp => builder.config("spark.executor.extraClassPath", cp))
-    sys.env.get("SPARK_GRAFT_EXEC_MEM")
-      .foreach(m => builder.config("spark.executor.memory", m))
-    if (master.startsWith("local-cluster")) {
-      // Forked executor JVMs don't inherit sbt's --add-opens (judge-checked:
-      // neither WorkerCommandBuilder nor StandaloneSchedulerBackend injects
-      // JavaModuleOptions in 4.1.2) — without these, Platform.unaligned
-      // reflection and Arrow/Unsafe access fail on JDK 17.
-      builder.config("spark.executor.extraJavaOptions",
-        org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2)
+    // SPARK_GRAFT_MASTER (see Harness.session) runs this same dump under a
+    // local-cluster for the multi-JVM attest; unset, it runs
+    // local[SPARK_GRAFT_CPUS].
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Failures must leave a visible artifact, not just a stderr line: in r9
     // the events-fixture drift silently shrank CORRECTNESS_r09 from 272 to
@@ -51,16 +21,12 @@ object Verify {
     // breakage shows up as data the driver (and a human) can read.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     var dumped = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        dumped += 1
-      } catch { case e: Throwable =>
-        failed(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Harness.board(only).foreach { case (name, fn) =>
+      Harness.run(spark, name)(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")).error match {
+        case None => dumped += 1
+        case Some(e) =>
+          failed(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

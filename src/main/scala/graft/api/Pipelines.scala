@@ -268,8 +268,8 @@ object Pipelines {
   /** Exact interpolated PERCENTILE_CONT p25/p50/p75 per group via the
     * cent-bucket-spine order-statistic selection — the shipped
     * `agg_percentile_cont_interp` plan (r16), factored here (ADVICE r16)
-    * so the `graft.QuantAB` bit-equality/scaling harness measures the SAME
-    * code the key executes instead of a hand-inlined copy.
+    * so PipelinesSpec's bit-equality check against the exact `percentile`
+    * aggregate runs the SAME code the key executes.
     *
     * Input: (rf: group key, p: DOUBLE values, non-null for every group
     * that should appear — see the precondition note at the key). Counts
@@ -280,7 +280,7 @@ object Pipelines {
     * interpolation reproduces Percentile.getPercentile term-for-term
     * (integral-position and equal-values short-circuits included) —
     * proved BIT-EQUAL to the single-aggregate Percentile plan at three
-    * fixtures and ×8 rows (QuantAB). */
+    * fixtures and ×8 rows (r16; PipelinesSpec pins sf0.001 and sf0.01). */
   def centSpinePercentiles(x: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DoubleType, LongType}

@@ -55,6 +55,25 @@ class PipelinesSpec extends AnyFunSuite {
     assert(graded.exceptAll(api).count() == 0)
   }
 
+  test("agg_percentile_cont_interp is bit-equal to the exact percentile aggregate") {
+    // the key's cent-bucket spine selection (Pipelines.centSpinePercentiles)
+    // against the single-aggregate plan it replaced, compared as raw IEEE
+    // bit patterns at two fixtures
+    def bits(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(r =>
+      r.getString(0) +: (1 to 3).map(i =>
+        java.lang.Double.doubleToRawLongBits(r.getDouble(i)).toString))
+    for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
+      val exact = graft.T.t(s, dir, "lineitem")
+        .select(col("l_returnflag"), col("l_extendedprice").cast("double").as("p"))
+        .groupBy("l_returnflag")
+        .agg(percentile(col("p"), lit(0.25)), percentile(col("p"), lit(0.5)),
+          percentile(col("p"), lit(0.75)))
+        .orderBy("l_returnflag")
+      val shipped = SparkEntry.queries("agg_percentile_cont_interp")(s, dir)
+      assert(bits(shipped.collect()) == bits(exact.collect()), dir)
+    }
+  }
+
   test("asofBackward matches join_asof's prior timestamps") {
     val ev = graft.T.t(s, sf, "events")
       .filter(col("event_type").isin("purchase", "click", "signup"))

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Combine two back-to-back BenchSteady min-of-N runs into the per-key
-anchor file by taking the per-key MIN (the r13 methodology, kept for r15:
-single-run min-of-3 on this shared box carries one multi-minute burst that
-inflates a contiguous alphabetical stretch >1.5x; two runs' bursts land on
-disjoint stretches, so the per-key min removes the burst while staying a
-genuine measured wall time).
+"""Combine two back-to-back `graft.BenchOne all <reps> <out.json>` min-of-N
+runs into the per-key anchor file by taking the per-key MIN (the r13
+methodology, kept for r15: single-run min-of-3 on this shared box carries
+one multi-minute burst that inflates a contiguous alphabetical stretch
+>1.5x; two runs' bursts land on disjoint stretches, so the per-key min
+removes the burst while staying a genuine measured wall time).
 
 usage: python3 tools/combine_perkey.py runA.json runB.json out.json "<note>"
 Prints a per-key comparison vs the previous out.json (if present) so the
